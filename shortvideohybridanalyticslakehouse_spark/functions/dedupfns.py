@@ -19,8 +19,6 @@ Scale design (the 100 TB story):
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from shortvideohybridanalyticslakehouse_spark.functions.localrel import (
@@ -701,10 +699,9 @@ def reband_hot_buckets(
     def _hot_count(df: DataFrame) -> list:
         """One job: a full-pass bucket count that BOTH materializes the
         freshly-persisted frontier (groupBy consumes every cached row)
-        and returns the next level's hot-bucket list — fusing the old
-        separate `nxt.count()` materialization job with the next
-        iteration's count job (r13, guide §1.2: one pass per level
-        instead of two)."""
+        and returns the next level's hot-bucket list (r13, guide §1.2:
+        one pass per level instead of a separate materialization
+        count)."""
         return (
             df.groupBy("bkey")
             .agg(F.count(F.lit(1)).alias("_n"))
@@ -712,12 +709,9 @@ def reband_hot_buckets(
             .collect()
         )
 
-    fuse = os.environ.get("SVH_REBAND_FUSE", "1") != "0"
     banded = banded.persist(StorageLevel.MEMORY_AND_DISK)
-    hot_rows = _hot_count(banded) if fuse else None
+    hot_rows = _hot_count(banded)
     for lvl in range(1, max_extra_levels + 1):
-        if not fuse:
-            hot_rows = _hot_count(banded)
         if not hot_rows:
             break
         spark = banded.sparkSession
@@ -784,10 +778,7 @@ def reband_hot_buckets(
         # Materialize the new frontier BEFORE dropping the old one so the
         # next level's count (and the final scorer) read cached rows instead
         # of recomputing the whole fingerprint lineage from scratch.
-        if fuse:
-            hot_rows = _hot_count(nxt)
-        else:
-            nxt.count()
+        hot_rows = _hot_count(nxt)
         banded.unpersist()
         banded = nxt
     return banded

@@ -21,8 +21,6 @@ bit-identical across engines that do the same (DuckDB list_* functions do).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -543,11 +541,11 @@ def semdedup_prune(
     the DuckDB oracle; a production run would swap in trained KMeans
     centers without touching the shape.
 
-    Scale shape: assignment is a scan-side codegen argmin against literal
-    centroids (no join); the candidate-pair stage is a SELF-JOIN ON CELL
-    ID — shuffle and quadratic work are both per-cell, and SemDeDup's own
-    recipe scales n_cells with corpus size (~sqrt n) so cell populations
-    stay bounded; the drop rule is one distinct over the pair output.
+    Scale shape: assignment is a scan-side numpy argmin against the
+    collected medoids (no join); the prune runs per cell in one grouped
+    kernel — shuffle and quadratic work are both per-cell, and SemDeDup's
+    own recipe scales n_cells with corpus size (~sqrt n) so cell
+    populations stay bounded.
     The fixture's synthetic embeddings top out at pair cosine ~0.51, so
     tau=0.30 sits inside the observed range to exercise the prune path
     (real text-embedding deployments use ~0.9+).
@@ -567,161 +565,100 @@ def semdedup_prune(
             [], "cell_id long, n_members bigint, n_kept bigint, n_dropped bigint"
         )
 
-    if os.environ.get("SVH_SEMDEDUP_ARROW", "1") == "1":
-        # r13 (guide §4.2): assignment + within-cell prune as two numpy
-        # kernels instead of a K-medoid HOF argmin per row plus an
-        # O(m^2)-row self-join with a per-pair HOF cosine (the r12
-        # profile shows 24 s executorRunTime in the pair stage and 13 s
-        # in assignment at sf0.1). Assignment distances replicate the
-        # Catalyst fold's operation order exactly (elementwise
-        # (x-y)*(x-y), left-to-right accumulation, medoids visited in
-        # ascending cell_id with strict < — same argmin tie-break as
-        # array_min over struct(dist, cell_id)). The pair cosine uses
-        # one blocked GEMM per cell with round-to-6 before the tau
-        # comparison — the same rounding contract (and the same GEMM
-        # precedent) as cosine_topk_vectorized; oracle hash equality at
-        # all three SFs gates it. SVH_SEMDEDUP_ARROW=0 keeps the old
-        # plan for A/B.
-        med = sorted(medoids)  # ascending cell_id for first-wins argmin
+    # r13 (guide §4.2): assignment + within-cell prune as two numpy
+    # kernels instead of a K-medoid HOF argmin per row plus an
+    # O(m^2)-row self-join with a per-pair HOF cosine (the r12
+    # profile shows 24 s executorRunTime in the pair stage and 13 s
+    # in assignment at sf0.1). Assignment distances accumulate
+    # elementwise (x-y)*(x-y) left to right, and medoids are visited in
+    # ascending cell_id with strict < — the oracle's ORDER BY d2,
+    # cell_id tie-break. The pair cosine uses one blocked GEMM per cell
+    # with round-to-``round_to`` before the tau
+    # comparison — the same rounding contract (and the same GEMM
+    # precedent) as cosine_topk_vectorized; oracle hash equality at
+    # all three SFs gates it.
+    med = sorted(medoids)  # ascending cell_id for first-wins argmin
 
-        def assign_kernel(it):
-            import numpy as np  # noqa: PLC0415
-            import pandas as pd  # noqa: PLC0415
+    def assign_kernel(it):
+        import numpy as np  # noqa: PLC0415
+        import pandas as pd  # noqa: PLC0415
 
-            mvs = [np.asarray(mv, dtype=np.float64) for _, mv in med]
-            cids = np.array([cid for cid, _ in med], dtype=np.int64)
-            for pdf in it:
-                if not len(pdf):
-                    continue
-                X = np.stack(pdf["_v"].to_numpy()).astype(np.float64)
-                best_d = None
-                best_c = None
-                for j, mv in enumerate(mvs):
-                    a = np.zeros(len(X), dtype=np.float64)
-                    for d in range(X.shape[1]):
-                        t = X[:, d] - mv[d]
-                        a = a + t * t
-                    if best_d is None:
-                        best_d, best_c = a, np.full(
-                            len(X), cids[j], dtype=np.int64
-                        )
-                    else:
-                        upd = a < best_d
-                        best_d = np.where(upd, a, best_d)
-                        best_c = np.where(upd, cids[j], best_c)
-                yield pd.DataFrame(
-                    {
-                        "cell_id": best_c,
-                        "_id": pdf["_id"].to_numpy(),
-                        "_v": pdf["_v"].to_numpy(),
-                    }
-                )
-
-        def cell_kernel(pdf):
-            import numpy as np  # noqa: PLC0415
-            import pandas as pd  # noqa: PLC0415
-
-            order = np.argsort(pdf["_id"].to_numpy(), kind="stable")
-            X = np.stack(pdf["_v"].to_numpy()[order]).astype(np.float64)
-            m = len(X)
-            cell = int(pdf["cell_id"].iloc[0])
-            if m < 2:
-                return pd.DataFrame(
-                    {"cell_id": [cell], "n_members": [m], "n_dropped": [0]}
-                )
-            norms = np.sqrt((X * X).sum(axis=1))
-            dropped = np.zeros(m, dtype=bool)
-            block = max(1, min(4096, (64 << 20) // (8 * m)))
-            col = np.arange(m)
-            for lo in range(0, m, block):
-                hi = min(lo + block, m)
-                sims = (X[lo:hi] @ X.T) / (
-                    norms[lo:hi, None] * norms[None, :]
-                )
-                q = np.round(sims, 6) >= tau
-                q &= col[None, :] > np.arange(lo, hi)[:, None]
-                dropped |= q.any(axis=0)
-            return pd.DataFrame(
+        mvs = [np.asarray(mv, dtype=np.float64) for _, mv in med]
+        cids = np.array([cid for cid, _ in med], dtype=np.int64)
+        for pdf in it:
+            if not len(pdf):
+                continue
+            X = np.stack(pdf["_v"].to_numpy()).astype(np.float64)
+            best_d = None
+            best_c = None
+            for j, mv in enumerate(mvs):
+                a = np.zeros(len(X), dtype=np.float64)
+                for d in range(X.shape[1]):
+                    t = X[:, d] - mv[d]
+                    a = a + t * t
+                if best_d is None:
+                    best_d, best_c = a, np.full(
+                        len(X), cids[j], dtype=np.int64
+                    )
+                else:
+                    upd = a < best_d
+                    best_d = np.where(upd, a, best_d)
+                    best_c = np.where(upd, cids[j], best_c)
+            yield pd.DataFrame(
                 {
-                    "cell_id": [cell],
-                    "n_members": [m],
-                    "n_dropped": [int(dropped.sum())],
+                    "cell_id": best_c,
+                    "_id": pdf["_id"].to_numpy(),
+                    "_v": pdf["_v"].to_numpy(),
                 }
             )
 
-        assigned = corpus.select(
-            F.col(id_col).alias("_id"),
-            F.col(vec_col).cast("array<double>").alias("_v"),
-        ).mapInPandas(
-            assign_kernel, "cell_id long, _id long, _v array<double>"
-        )
-        out = assigned.groupBy("cell_id").applyInPandas(
-            cell_kernel, "cell_id long, n_members long, n_dropped long"
-        )
-        return out.select(
-            F.col("cell_id").cast("long").alias("cell_id"),
-            F.col("n_members"),
-            (F.col("n_members") - F.col("n_dropped")).alias("n_kept"),
-            F.col("n_dropped"),
-        ).orderBy("cell_id")
+    def cell_kernel(pdf):
+        import numpy as np  # noqa: PLC0415
+        import pandas as pd  # noqa: PLC0415
 
-    def _dist_expr(mv: list[float]) -> Column:
-        diff2 = F.zip_with(
-            F.col(vec_col),
-            F.array(*[F.lit(x) for x in mv]),
-            lambda x, y: (x.cast("double") - y) * (x.cast("double") - y),
-        )
-        return F.aggregate(diff2, F.lit(0.0), lambda acc, v: acc + v)
-
-    cell_structs = F.array(
-        *[
-            F.struct(
-                _dist_expr(mv).alias("dist"),
-                F.lit(cid).cast("long").alias("cell_id"),
+        order = np.argsort(pdf["_id"].to_numpy(), kind="stable")
+        X = np.stack(pdf["_v"].to_numpy()[order]).astype(np.float64)
+        m = len(X)
+        cell = int(pdf["cell_id"].iloc[0])
+        if m < 2:
+            return pd.DataFrame(
+                {"cell_id": [cell], "n_members": [m], "n_dropped": [0]}
             )
-            for cid, mv in medoids
-        ]
-    )
-    assigned = corpus.select(id_col, vec_col).withColumn(
-        "cell_id", F.array_min(cell_structs).getField("cell_id")
-    )
-    a = assigned.select(
-        F.col("cell_id"),
-        F.col(id_col).alias("id_a"),
-        F.col(vec_col).alias("vec_a"),
-    )
-    b = assigned.select(
-        F.col("cell_id").alias("cell_b"),
-        F.col(id_col).alias("id_b"),
-        F.col(vec_col).alias("vec_b"),
-    )
-    dropped = (
-        a.join(b, (a.cell_id == b.cell_b) & (F.col("id_a") < F.col("id_b")))
-        .filter(
-            F.round(cosine(F.col("vec_a"), F.col("vec_b")), round_to)
-            >= F.lit(tau)
+        norms = np.sqrt((X * X).sum(axis=1))
+        dropped = np.zeros(m, dtype=bool)
+        block = max(1, min(4096, (64 << 20) // (8 * m)))
+        col = np.arange(m)
+        for lo in range(0, m, block):
+            hi = min(lo + block, m)
+            sims = (X[lo:hi] @ X.T) / (
+                norms[lo:hi, None] * norms[None, :]
+            )
+            q = np.round(sims, round_to) >= tau
+            q &= col[None, :] > np.arange(lo, hi)[:, None]
+            dropped |= q.any(axis=0)
+        return pd.DataFrame(
+            {
+                "cell_id": [cell],
+                "n_members": [m],
+                "n_dropped": [int(dropped.sum())],
+            }
         )
-        .select("cell_id", "id_b")
-        .distinct()
-        .groupBy("cell_id")
-        .agg(F.count(F.lit(1)).alias("n_dropped"))
-    )
-    members = assigned.groupBy("cell_id").agg(
-        F.count(F.lit(1)).alias("n_members")
-    )
-    return (
-        members.join(dropped, "cell_id", "left")
-        .select(
-            F.col("cell_id").cast("long").alias("cell_id"),
-            "n_members",
-            (
-                F.col("n_members") - F.coalesce(F.col("n_dropped"), F.lit(0))
-            ).alias("n_kept"),
-            F.coalesce(F.col("n_dropped"), F.lit(0)).alias("n_dropped"),
-        )
-        .orderBy("cell_id")
-    )
 
+    assigned = corpus.select(
+        F.col(id_col).alias("_id"),
+        F.col(vec_col).cast("array<double>").alias("_v"),
+    ).mapInPandas(
+        assign_kernel, "cell_id long, _id long, _v array<double>"
+    )
+    out = assigned.groupBy("cell_id").applyInPandas(
+        cell_kernel, "cell_id long, n_members long, n_dropped long"
+    )
+    return out.select(
+        F.col("cell_id").cast("long").alias("cell_id"),
+        F.col("n_members"),
+        (F.col("n_members") - F.col("n_dropped")).alias("n_kept"),
+        F.col("n_dropped"),
+    ).orderBy("cell_id")
 
 
 _VEC_TILE = 1024  # numpy block edge for the pair GEMM (8 MB float64 tile)

@@ -23,8 +23,6 @@ of O(distinct bigrams).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -62,6 +60,21 @@ FROM hits GROUP BY 1, 2, 3
 """
 
 
+def _doc_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, toks) token arrays, materialized once. The frame feeds
+    the n-gram count branch AND every broadcast-pruned postings side (2
+    for the bigram lane, 3 for the trigram chain) — without
+    materialization each consumer re-runs the regex split+lower+trim over
+    the whole corpus in its own map stage (no exchange between them for
+    ReuseExchange to share; profiled 3x per trial). Eager: sibling stages
+    race a lazy checkpoint (the winnowing lesson)."""
+    toks = load_table(spark, sf_dir, "documents").select(
+        "doc_id",
+        F.split(F.lower(F.trim(F.col("text"))), r"\s+").alias("toks"),
+    )
+    return defer_release(toks.localCheckpoint(eager=True))
+
+
 @register("phrase_search_positional", _PHRASE_ORACLE)
 def q_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact phrase matching via positional-postings intersection: the
@@ -70,20 +83,7 @@ def q_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     an all-equi join over index-pruned postings, never a full-text scan.
     (The oracle verifies the same result through direct adjacent-bigram
     matching; the Spark plan is the scalable-index shape.)"""
-    docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id",
-        F.split(F.lower(F.trim(F.col("text"))), r"\s+").alias("toks"),
-    )
-    if os.environ.get("SVH_PHRASE_CKPT", "1") != "0":
-        # the token-array frame feeds the n-gram count branch AND every
-        # broadcast-pruned postings side (2 for the bigram lane, 3 for
-        # the trigram chain) — without materialization each consumer
-        # re-runs the regex split+lower+trim over the whole corpus in
-        # its own map stage (no exchange between them for ReuseExchange
-        # to share; profiled 3x per trial). Eager: sibling stages race
-        # a lazy checkpoint (the winnowing lesson).
-        toks = defer_release(toks.localCheckpoint(eager=True))
+    toks = _doc_tokens(spark, sf_dir)
     # workload derivation: adjacent-bigram counts, map-side pair
     # construction with array HOFs (no per-token shuffle before the agg)
     pairs = F.expr(
@@ -197,20 +197,7 @@ def q_phrase3_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     postings of the first term, then one equi-join per later slot on
     (doc_id, anchor_pos + i, term). The oracle verifies through direct
     adjacent-trigram matching."""
-    docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id",
-        F.split(F.lower(F.trim(F.col("text"))), r"\s+").alias("toks"),
-    )
-    if os.environ.get("SVH_PHRASE_CKPT", "1") != "0":
-        # the token-array frame feeds the n-gram count branch AND every
-        # broadcast-pruned postings side (2 for the bigram lane, 3 for
-        # the trigram chain) — without materialization each consumer
-        # re-runs the regex split+lower+trim over the whole corpus in
-        # its own map stage (no exchange between them for ReuseExchange
-        # to share; profiled 3x per trial). Eager: sibling stages race
-        # a lazy checkpoint (the winnowing lesson).
-        toks = defer_release(toks.localCheckpoint(eager=True))
+    toks = _doc_tokens(spark, sf_dir)
     tris = F.expr(
         "transform(slice(toks, 1, greatest(size(toks) - 2, 0)),"
         " (x, i) -> struct(x AS t0, toks[i + 1] AS t1, toks[i + 2] AS t2))"

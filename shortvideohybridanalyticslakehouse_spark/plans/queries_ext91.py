@@ -25,8 +25,6 @@ precedent (medoids, k-core round counts).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -141,33 +139,18 @@ def _quantized(emb: DataFrame) -> DataFrame:
     )
 
 
-def _assign_col(cents: list[list[int]]):
-    """argmin_k squared-L2 to the K literal centroids, ties to lowest k."""
-    best = None
-    for k, c in enumerate(cents):
-        lit = F.array(*[F.lit(int(v)) for v in c])
-        dist = F.aggregate(
-            F.zip_with(F.col("xq"), lit, lambda a, b: (a - b) * (a - b)),
-            F.lit(0).cast("long"),
-            lambda a, b: a + b,
-        )
-        cand = F.struct(dist.alias("dist"), F.lit(k).alias("k"))
-        best = cand if best is None else F.least(best, cand)
-    return best
-
-
 def _kmeans_partials_kernel(
     assign_cents: list[list[int]],
     measure_cents: list[list[int]] | None = None,
 ):
     """mapInPandas kernel: per input batch, exact-integer assignment to
     the K ``assign_cents`` (argmin squared-L2, ties to lowest k — the
-    same total order as _assign_col's F.least on struct(dist, k)) and
-    PARTIAL per-(cluster, dim) sums/counts plus the per-cluster partial
-    inertia measured against ``measure_cents`` (defaults to the
-    assignment centroids; the final stats pass assigns with the LAST
-    round's centroids but measures distance to the UPDATED ones, exactly
-    like the old plan's final_dist CASE). All arithmetic is int64
+    oracle's ORDER BY dist, k) and PARTIAL per-(cluster, dim)
+    sums/counts plus the per-cluster partial inertia measured against
+    ``measure_cents`` (defaults to the assignment centroids; the final
+    stats pass assigns with the LAST round's centroids but measures
+    distance to the UPDATED ones, exactly like the oracle's
+    final_dists). All arithmetic is int64
     (micro-quantized inputs keep every product far below 2^63), and
     integer addition is associative — the numpy fold is bit-identical to
     the Catalyst HOF it replaces, just ~10x cheaper per row (guide §4.2:
@@ -226,12 +209,12 @@ def q_kmeans_lloyd_integer(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs as ONE numpy int64 kernel per partition (mapInPandas) instead
     of a K x D Catalyst HOF per row plus a posexplode of N x D rows —
     integer arithmetic is associative, so the results are bit-identical
-    (tests/test_ext91_kmeans_kernel.py proves round-for-round equality
-    vs the HOF path). SVH_KMEANS_ARROW=0 restores the old plan.
+    (tests/test_ext91_kmeans_kernel.py checks the kernel's partials
+    against a pure-Python reference). An embeddings table with no seed
+    vec_id < K has no initial centroids and raises ValueError.
     """
     emb = load_table(spark, sf_dir, "embeddings")
     q = defer_release(_quantized(emb).localCheckpoint(eager=True))
-    use_arrow = os.environ.get("SVH_KMEANS_ARROW", "1") == "1"
 
     cents = [
         [int(v) for v in r.xq]
@@ -239,85 +222,30 @@ def q_kmeans_lloyd_integer(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("vec_id")
         .collect()
     ]
-    if use_arrow and cents:
-        prev_cents = cents
-        for _round in range(_ROUNDS):
-            partials = (
-                q.select("xq")
-                .mapInPandas(
-                    _kmeans_partials_kernel(cents), _KMEANS_PARTIAL_SCHEMA
-                )
-                .groupBy("k", "d")
-                .agg(
-                    F.sum("s").alias("s"),
-                    F.sum("n").alias("n"),
-                )
-                .collect()
-            )
-            by_k: dict[int, dict[int, tuple[int, int]]] = {}
-            for r in partials:
-                by_k.setdefault(int(r.k), {})[int(r.d)] = (int(r.s), int(r.n))
-
-            def trunc_div(s: int, n: int) -> int:
-                return -((-s) // n) if s < 0 else s // n
-
-            new_cents = []
-            for k in range(_K):
-                if k in by_k:
-                    new_cents.append(
-                        [
-                            trunc_div(by_k[k][d][0], by_k[k][d][1])
-                            for d in range(len(cents[k]))
-                        ]
-                    )
-                else:  # empty cluster: keep previous centroid
-                    new_cents.append(cents[k])
-            prev_cents, cents = cents, new_cents
-        # final stats: assign with the LAST round's centroids (the old
-        # plan's `assigned` was built before the last update) but
-        # measure inertia against the UPDATED centroids (its final_dist
-        # CASE used the post-loop cents)
-        final = (
+    if not cents:
+        raise ValueError(
+            f"kmeans_lloyd_integer: no seed centroids (no embeddings "
+            f"with vec_id < {_K})"
+        )
+    prev_cents = cents
+    for _round in range(_ROUNDS):
+        partials = (
             q.select("xq")
             .mapInPandas(
-                _kmeans_partials_kernel(prev_cents, cents),
-                _KMEANS_PARTIAL_SCHEMA,
+                _kmeans_partials_kernel(cents), _KMEANS_PARTIAL_SCHEMA
             )
-            .groupBy(F.col("k").cast("int").alias("cluster"))
-            .agg(
-                F.sum(F.when(F.col("d") == 0, F.col("n"))).alias(
-                    "n_members"
-                ),
-                F.sum("inert").cast("bigint").alias("inertia"),
-            )
-        )
-        checksums = {k: sum(abs(v) for v in c) for k, c in enumerate(cents)}
-        cks = F.create_map(
-            *[x for k, s in checksums.items() for x in (F.lit(k), F.lit(s))]
-        )
-        return final.select(
-            "cluster",
-            F.col("n_members").cast("bigint").alias("n_members"),
-            "inertia",
-            cks[F.col("cluster")].cast("bigint").alias("centroid_abs_sum"),
-        )
-
-    assigned = None
-    for _round in range(_ROUNDS):
-        assigned = q.select(
-            "vec_id", "xq", _assign_col(cents)["k"].alias("k")
-        )
-        sums = (
-            assigned.select("k", F.posexplode("xq").alias("d", "v"))
             .groupBy("k", "d")
-            .agg(F.sum("v").alias("s"), F.count(F.lit(1)).alias("n"))
+            .agg(
+                F.sum("s").alias("s"),
+                F.sum("n").alias("n"),
+            )
             .collect()
         )
         by_k: dict[int, dict[int, tuple[int, int]]] = {}
-        for r in sums:
+        for r in partials:
             by_k.setdefault(int(r.k), {})[int(r.d)] = (int(r.s), int(r.n))
+
         def trunc_div(s: int, n: int) -> int:
-            # toward-zero division (SQL DIV / DuckDB //); Python // floors
             return -((-s) // n) if s < 0 else s // n
 
         new_cents = []
@@ -326,41 +254,37 @@ def q_kmeans_lloyd_integer(spark: SparkSession, sf_dir: str) -> DataFrame:
                 new_cents.append(
                     [
                         trunc_div(by_k[k][d][0], by_k[k][d][1])
-                        for d in range(_D)
+                        for d in range(len(cents[k]))
                     ]
                 )
             else:  # empty cluster: keep previous centroid
                 new_cents.append(cents[k])
-        cents = new_cents
-
-    final_dist = None
-    for k, c in enumerate(cents):
-        lit = F.array(*[F.lit(int(v)) for v in c])
-        d = F.aggregate(
-            F.zip_with(F.col("xq"), lit, lambda a, b: (a - b) * (a - b)),
-            F.lit(0).cast("long"),
-            lambda a, b: a + b,
+        prev_cents, cents = cents, new_cents
+    # final stats: assign with the LAST round's centroids (the oracle's
+    # last assignment is built before the last update) but measure
+    # inertia against the UPDATED centroids (its final_dists join the
+    # post-loop cents)
+    final = (
+        q.select("xq")
+        .mapInPandas(
+            _kmeans_partials_kernel(prev_cents, cents),
+            _KMEANS_PARTIAL_SCHEMA,
         )
-        final_dist = (
-            F.when(F.col("k") == k, d)
-            if final_dist is None
-            else final_dist.when(F.col("k") == k, d)
+        .groupBy(F.col("k").cast("int").alias("cluster"))
+        .agg(
+            F.sum(F.when(F.col("d") == 0, F.col("n"))).alias(
+                "n_members"
+            ),
+            F.sum("inert").cast("bigint").alias("inertia"),
         )
+    )
     checksums = {k: sum(abs(v) for v in c) for k, c in enumerate(cents)}
     cks = F.create_map(
         *[x for k, s in checksums.items() for x in (F.lit(k), F.lit(s))]
     )
-    return (
-        assigned.select("k", final_dist.alias("dist"))
-        .groupBy(F.col("k").alias("cluster"))
-        .agg(
-            F.count(F.lit(1)).alias("n_members"),
-            F.sum("dist").cast("bigint").alias("inertia"),
-        )
-        .select(
-            "cluster",
-            "n_members",
-            "inertia",
-            cks[F.col("cluster")].cast("bigint").alias("centroid_abs_sum"),
-        )
+    return final.select(
+        "cluster",
+        F.col("n_members").cast("bigint").alias("n_members"),
+        "inertia",
+        cks[F.col("cluster")].cast("bigint").alias("centroid_abs_sum"),
     )

@@ -58,7 +58,7 @@ def finalize_bounded(result: DataFrame, *cached: DataFrame) -> DataFrame:
     # every downstream action on the finalized frame otherwise pays ~0.5 s
     # of Python-worker round-trips for a handful of rows (guide §4/§5;
     # falls back to createDataFrame for any value without an exact SQL
-    # literal form, and under SVH_LOCALREL=0).
+    # literal form).
     from shortvideohybridanalyticslakehouse_spark.functions.localrel import (
         bounded_rows_df,
     )
@@ -75,18 +75,13 @@ def release_materialized(df: DataFrame) -> None:
     which in a long bench session is arbitrarily late. For a
     checkpointed frame the analyzed plan is a LogicalRDD wrapping that
     RDD — unpersist it directly. Callers must be DONE with the frame:
-    a localCheckpoint has no lineage left to recompute from.
+    a localCheckpoint has no lineage left to recompute from. Failures
+    propagate: a release that cannot run is a lifetime bug, not noise.
     """
-    try:
-        df.unpersist()
-    except Exception:  # pragma: no cover - defensive
-        pass
-    try:
-        plan = df._jdf.queryExecution().analyzed()
-        if plan.getClass().getSimpleName() == "LogicalRDD":
-            plan.rdd().unpersist(False)
-    except Exception:  # pragma: no cover - py4j surface drift
-        pass
+    df.unpersist()
+    plan = df._jdf.queryExecution().analyzed()
+    if plan.getClass().getSimpleName() == "LogicalRDD":
+        plan.rdd().unpersist(False)
 
 
 def register(name: str, oracle: str | None):

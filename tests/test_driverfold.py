@@ -1,6 +1,6 @@
 """driverfold.spark_round must be bit-identical to Spark SQL round() on
-doubles, and the markov driver folds must reproduce the in-plan Catalyst
-folds exactly (toggle A/B at sf0.001)."""
+doubles, and the markov driver folds must reproduce the DuckDB oracles'
+in-plan list folds exactly (sf0.001 and an empty events table)."""
 
 from __future__ import annotations
 
@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from shortvideohybridanalyticslakehouse_spark.functions.driverfold import (
     spark_round,
 )
+from tools.check_oracle import lane_vs_oracle
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -46,30 +47,25 @@ def test_spark_round_bit_exact_grid(spark):
             assert mine.hex() == theirs.hex(), (v, scale, mine, theirs)
 
 
-@pytest.mark.parametrize(
-    "lane",
-    [
-        "markov_removal_attribution",
-        "markov_expected_steps",
-        "markov_stationary_power",
-    ],
-)
-def test_markov_driver_fold_matches_inplan(spark, lane, monkeypatch):
-    from shortvideohybridanalyticslakehouse_spark.plans.registry import (
-        load_all,
-    )
+MARKOV_LANES = [
+    "markov_removal_attribution",
+    "markov_expected_steps",
+    "markov_stationary_power",
+]
 
-    registry = load_all()
-    fn, _ = registry[lane]
 
-    def rows(toggle: str):
-        monkeypatch.setenv("SVH_MARKOV_DRIVER", toggle)
-        out = fn(spark, SF_DIR).collect()
-        return sorted(
-            tuple(
-                v.hex() if isinstance(v, float) else v for v in r
-            )
-            for r in out
-        )
+@pytest.mark.parametrize("lane", MARKOV_LANES)
+def test_markov_driver_fold_matches_inplan(spark, lane):
+    got, want = lane_vs_oracle(spark, lane, SF_DIR)
+    assert got == want
+    assert got[0] > 0
 
-    assert rows("1") == rows("0")
+
+@pytest.mark.parametrize("lane", MARKOV_LANES)
+def test_markov_zero_events_matches_oracle(spark, lane, zero_row_dir):
+    """Without events every matrix row falls back to its backstop cell
+    (null-absorbing or self-loop); the fold still runs and agrees with
+    the oracle."""
+    got, want = lane_vs_oracle(spark, lane, zero_row_dir)
+    assert got == want
+    assert got[0] > 0

@@ -8,6 +8,7 @@ from __future__ import annotations
 import pytest
 
 from shortvideohybridanalyticslakehouse_spark.plans.registry import load_all
+from tools.check_oracle import frame_hash, lane_vs_oracle
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -28,14 +29,15 @@ LANES = [
 
 @pytest.mark.parametrize("lane", LANES)
 def test_capped_equals_uncapped(spark, lane, monkeypatch):
+    """The default budget never flushes at sf0.001 (one concat per
+    partition); a 64-token budget flushes many times. Both must equal
+    the oracle."""
     fn, _ = load_all()[lane]
-    monkeypatch.setenv("SVH_SA_CAP", "0")
-    base = sorted(tuple(r) for r in fn(spark, SF_DIR).collect())
-    monkeypatch.setenv("SVH_SA_CAP", "1")
+    base, want = lane_vs_oracle(spark, lane, SF_DIR)
+    assert base == want
     monkeypatch.setenv("SVH_SA_MAX_TOKENS", "64")  # force many flushes
-    capped = sorted(tuple(r) for r in fn(spark, SF_DIR).collect())
-    assert base == capped
-    assert len(base) > 0
+    assert frame_hash(fn(spark, SF_DIR).toPandas()) == base
+    assert base[0] > 0
 
 
 def test_capped_kernel_planted_skew():

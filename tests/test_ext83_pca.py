@@ -70,3 +70,20 @@ def test_gram_pass_partition_invariant(spark, tmp_path):
     assert a[(-1, -1)] == len(q)
     assert a[(3, 17)] == int((q[:, 3] * q[:, 17]).sum())
     assert a[(9, -1)] == int(q[:, 9].sum())
+
+
+def test_pca_zero_rows_vs_oracle(spark, zero_row_dir):
+    """Empty embeddings: 64 rows with loading 0.0 and a NULL eigenvalue.
+    The oracle agrees on rows, columns, dims and eigenvalue; its loadings
+    are NULL (a known divergence, kept as the engine always returned)."""
+    from tools.check_oracle import duck_connect
+
+    fn, oracle = load_all()["embedding_pca_power"]
+    got = fn(spark, zero_row_dir).toPandas().sort_values("dim")
+    con = duck_connect(zero_row_dir)
+    want = con.sql(oracle).df().sort_values("dim")
+    assert sorted(got.columns) == sorted(want.columns)
+    assert list(got.dim) == list(want.dim) == list(range(_D))
+    assert (got.loading == 0.0).all()
+    assert got.eigenvalue.isna().all() and want.eigenvalue.isna().all()
+    assert want.loading.isna().all()

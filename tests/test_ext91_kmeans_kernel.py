@@ -1,10 +1,12 @@
-"""kmeans_lloyd_integer: the numpy mapInPandas kernel path must produce
-output identical to the Catalyst HOF path (all-integer arithmetic is
+"""kmeans_lloyd_integer: the numpy mapInPandas kernel must reproduce the
+DuckDB oracle's list-HOF Lloyd rounds exactly (all-integer arithmetic is
 associative, so this is exact equality, not approx)."""
 
 from __future__ import annotations
 
 import pytest
+
+from tools.check_oracle import duck_connect, frame_hash, lane_vs_oracle
 
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -17,21 +19,24 @@ SF_DIR = "/root/testdata/sf0.001"
 # (the r13 toggle-file lesson).
 
 
-def test_kernel_matches_hof_path(spark, monkeypatch):
+def test_kernel_matches_hof_path(spark):
+    got, want = lane_vs_oracle(spark, "kmeans_lloyd_integer", SF_DIR)
+    assert got == want
+    assert got[0] > 0
+
+
+def test_no_seed_centroids_raises(spark, zero_row_dir):
+    """An empty embeddings table has no seed vectors (vec_id < K): the
+    lane raises a clear error, while the oracle returns zero clusters."""
     from shortvideohybridanalyticslakehouse_spark.plans.registry import (
         load_all,
     )
 
-    fn, _ = load_all()["kmeans_lloyd_integer"]
-
-    def rows(toggle: str):
-        monkeypatch.setenv("SVH_KMEANS_ARROW", toggle)
-        return sorted(tuple(r) for r in fn(spark, SF_DIR).collect())
-
-    a = rows("0")
-    b = rows("1")
-    assert a == b
-    assert len(a) > 0
+    fn, oracle = load_all()["kmeans_lloyd_integer"]
+    with pytest.raises(ValueError, match="no seed centroids"):
+        fn(spark, zero_row_dir)
+    con = duck_connect(zero_row_dir)
+    assert frame_hash(con.sql(oracle).df())[0] == 0
 
 
 def test_kernel_partials_exact_tiny():

@@ -116,13 +116,6 @@ def test_fallback_on_unsupported_type(spark):
     assert "Scan ExistingRDD" in plan or "LocalTableScan" not in plan
 
 
-def test_kill_switch(spark, monkeypatch):
-    monkeypatch.setenv("SVH_LOCALREL", "0")
-    b = local_rows_df(spark, [(1, "a")], "k bigint, v string")
-    plan = b._jdf.queryExecution().executedPlan().toString()
-    assert "LocalTableScan" not in plan
-
-
 def test_bounded_rows_df_roundtrip(spark):
     src = spark.createDataFrame(
         [(1, "x", 1.5), (2, None, float("nan"))],

@@ -29,21 +29,24 @@ def test_raster_pipeline_fuses_to_one_mapinpandas(spark):  # noqa: F811
     assert _plan(stats).count("MapInPandas") == 1
 
 
-def test_fused_results_equal_unfused(spark, monkeypatch):  # noqa: F811
+def test_fused_results_equal_unfused(spark):  # noqa: F811
     docs = spark.range(0, 60).select(F.col("id").alias("doc_id"))
 
-    def pipeline():
-        payloads = multimodal.synthetic_raster_payloads(docs, "doc_id")
-        resized = multimodal.resize_raster(payloads, 16, 12, "doc_id")
+    def pipeline(break_chain: bool):
+        # an identity JVM-side select between stages drops the chain
+        # attribute, so each stage keeps its own MapInPandas
+        def hop(df):
+            return df.select("*") if break_chain else df
+
+        payloads = hop(multimodal.synthetic_raster_payloads(docs, "doc_id"))
+        resized = hop(multimodal.resize_raster(payloads, 16, 12, "doc_id"))
         return multimodal.raster_decode_stats(resized, "doc_id")
 
-    monkeypatch.setenv("SVH_MM_FUSE", "0")
-    unfused = pipeline()
+    unfused = pipeline(break_chain=True)
     assert _plan(unfused).count("MapInPandas") == 3
     expected = _hashsum(unfused)
 
-    monkeypatch.setenv("SVH_MM_FUSE", "1")
-    fused = pipeline()
+    fused = pipeline(break_chain=False)
     assert _plan(fused).count("MapInPandas") == 1
     assert _hashsum(fused) == expected
 

@@ -1,17 +1,19 @@
-"""Round-13 optimization toggles: every env-toggled plan variant must
-produce identical results to the legacy plan at sf0.001, and deferred
-checkpoint releases must actually free blocks at the next query build."""
+"""Lanes whose round-13 plan rewrites once sat behind env toggles: each
+must hash-match its DuckDB oracle at sf0.001 (the toggles and their
+legacy plans are gone; the second field of each row names the retired
+toggle so the test ids stay stable), and deferred checkpoint releases
+must actually free blocks at the next query build."""
 
 from __future__ import annotations
-
-import math
 
 import pytest
 
 from shortvideohybridanalyticslakehouse_spark.plans.registry import (
     drain_deferred,
     load_all,
+    release_materialized,
 )
+from tools.check_oracle import lane_vs_oracle
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -38,31 +40,14 @@ TOGGLED = [
 # after this file (found r13: test_scaled_shuffle failed only in-suite).
 
 
-def _canon(rows):
-    out = []
-    for r in rows:
-        vals = []
-        for v in r:
-            if isinstance(v, float):
-                vals.append("nan" if math.isnan(v) else v.hex())
-            else:
-                vals.append(v)
-        out.append(tuple(vals))
-    return sorted(out)
-
-
 @pytest.mark.parametrize("lane,env", TOGGLED)
-def test_toggle_equality(spark, lane, env, monkeypatch):
-    fn, _ = load_all()[lane]
-    monkeypatch.setenv(env, "1")
-    on = _canon(fn(spark, SF_DIR).collect())
-    monkeypatch.setenv(env, "0")
-    off = _canon(fn(spark, SF_DIR).collect())
-    assert on == off
+def test_toggle_equality(spark, lane, env):
+    got, want = lane_vs_oracle(spark, lane, SF_DIR)
+    assert got == want
     # covis_rule_quality is legitimately empty at sf0.001 (min-support
     # filter); every other lane must produce rows
     if lane != "covis_rule_quality":
-        assert len(on) > 0
+        assert got[0] > 0
 
 
 def test_deferred_checkpoints_released_at_next_build(spark):
@@ -88,3 +73,35 @@ def test_deferred_checkpoints_released_at_next_build(spark):
     assert _new()  # blocks deferred, not leaked
     drain_deferred()
     assert _new() == set()
+
+
+
+def _failing_unpersist(*args, **kwargs):
+    raise RuntimeError("unpersist failed")
+
+
+class _FailingPlanLookup:
+    """Stands in for ``df._jdf``: unpersist works, the plan lookup that
+    finds the checkpoint RDD fails."""
+
+    def unpersist(self, *args):
+        return self
+
+    def queryExecution(self):
+        raise RuntimeError("plan lookup failed")
+
+
+@pytest.mark.parametrize(
+    "attr,broken",
+    [("unpersist", _failing_unpersist), ("_jdf", _FailingPlanLookup())],
+    ids=["unpersist", "checkpoint_rdd"],
+)
+def test_failing_release_raises(spark, monkeypatch, attr, broken):
+    """Both release steps surface their errors instead of leaving the
+    blocks behind silently."""
+    df = spark.range(10).localCheckpoint(eager=True)
+    monkeypatch.setattr(df, attr, broken)
+    with pytest.raises(RuntimeError, match="failed"):
+        release_materialized(df)
+    monkeypatch.undo()
+    release_materialized(df)

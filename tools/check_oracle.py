@@ -12,10 +12,11 @@ from __future__ import annotations
 
 import hashlib
 import math
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 import pandas as pd
@@ -48,18 +49,47 @@ def frame_hash(df: pd.DataFrame) -> tuple[int, list[str], str]:
     return len(df), cols, h
 
 
+TABLES = (
+    "region nation customer supplier part orders lineitem events "
+    "documents embeddings"
+).split()
+
+
+def duck_connect(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """DuckDB connection with one view per fixture table in ``sf_dir``.
+
+    A table is a single ``<name>.parquet`` file or a directory of part
+    files as Spark writes them; tables absent from ``sf_dir`` get no
+    view (small test fixtures carry only the tables their lanes read).
+    """
+    con = duckdb.connect()
+    for t in TABLES:
+        src = os.path.join(sf_dir, f"{t}.parquet")
+        if os.path.isdir(src):
+            src = os.path.join(src, "*.parquet")
+        elif not os.path.exists(src):
+            continue
+        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{src}'")
+    return con
+
+
+def lane_vs_oracle(spark, name: str, sf_dir: str) -> tuple[tuple, tuple]:
+    """(Spark, DuckDB) ``frame_hash`` of one registered lane at ``sf_dir``.
+
+    Runs the registry builder as-is, without ``__spark_entry__``'s conf
+    pinning, so a caller's shared session keeps its confs."""
+    fn, oracle = entrymod.REGISTRY[name]
+    got = frame_hash(fn(spark, sf_dir).toPandas())
+    con = duck_connect(sf_dir)  # a relation does not keep it open
+    want = frame_hash(con.sql(oracle).df())
+    return got, want
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
     spark = get_spark("oracle-check")
-    con = duckdb.connect()
-    for t in (
-        "region nation customer supplier part orders lineitem events "
-        "documents embeddings".split()
-    ):
-        con.sql(
-            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-        )
+    con = duck_connect(sf_dir)
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
     failures = []
